@@ -133,19 +133,6 @@ def typed_scan(df: DataFrame, type_col: str, types: list[str]) -> DataFrame:
     return df.filter(F.col(type_col).isin(types))
 
 
-def point_lookup(df: DataFrame, key_col: str, keys_df: DataFrame, key_alias: str) -> DataFrame:
-    """S2→J3: the reference's per-key point lookup, done the Spark way.
-
-    The reference fetches one order per HTTP GET in a sequential loop
-    (src/square.ts:117-156, loop at src/etl-square-orders.ts:197-199) —
-    its throughput ceiling.  Distributed engines never loop row-at-a-
-    time: the set of keys becomes a DataFrame and the lookup becomes one
-    equi-join (broadcast when the key set is small, sort-merge
-    otherwise — AQE decides).
-    """
-    return keys_df.join(df, keys_df[key_alias] == df[key_col], "inner")
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,
@@ -293,16 +280,6 @@ def csv_ingest_quarantine(
     )
     rejects = parsed.filter(failed).drop("__parsed")
     return valid, rejects
-
-
-def pushed_filters(df: DataFrame) -> str:
-    """Return the PushedFilters fragment of a scan's formatted plan.
-
-    Test helper: asserts that a predicate actually reached the parquet
-    reader instead of being evaluated post-scan.
-    """
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "\n".join(line.strip() for line in plan.splitlines() if "PushedFilters" in line)
 
 
 def zorder_key(cols: list[str | Column], bits: int = 16) -> Column:

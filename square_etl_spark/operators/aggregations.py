@@ -18,6 +18,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructType,
+    VariantType,
+)
 from pyspark.sql.window import Window
 
 #: scale for deterministic decimal accumulation; 6 fractional digits
@@ -32,11 +39,6 @@ def _c(col: Column | str) -> Column:
 def decimal_sum(col: Column | str, scale: int = DECIMAL_SCALE) -> Column:
     """Order-independent SUM over doubles (see module docstring)."""
     return F.sum(_c(col).cast(f"decimal(38,{scale})")).cast("double")
-
-
-def decimal_avg(col: Column | str, scale: int = DECIMAL_SCALE) -> Column:
-    """Order-independent AVG: exact decimal sum, then one double division."""
-    return decimal_sum(col, scale) / F.count(F.lit(1))
 
 
 def distinct_keys(df: DataFrame, *cols: str) -> DataFrame:
@@ -54,15 +56,38 @@ def last_writer_wins(
     The reference gets this implicitly from replaying upserts in
     arrival order (ON CONFLICT DO UPDATE; src/etl-square-payments.ts:82-94).
     Deterministic re-specification: max by (order_cols...) descending
-    with key tiebreak, via one window row_number (SURVEY.md §2.5 A3).
+    via one window row_number (SURVEY.md §2.5 A3).  Rows that tie on
+    every order column are broken by the remaining non-key columns,
+    ascending with NULLs last, so a tie has one winner whatever the
+    plan shape or input order (map-typed columns cannot be ordered and
+    are skipped).  A key repeated with identical payloads is the only
+    tie left, and its rows are interchangeable.
     """
+    skip = set(key_cols) | set(order_cols)
+    tiebreak = [
+        F.col(f.name).asc_nulls_last()
+        for f in df.schema.fields
+        if f.name not in skip and _orderable(f.dataType)
+    ]
     order = [F.col(c).desc_nulls_last() for c in order_cols]
-    w = Window.partitionBy(*key_cols).orderBy(*order)
+    w = Window.partitionBy(*key_cols).orderBy(*order, *tiebreak)
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
+
+
+def _orderable(dt: DataType) -> bool:
+    """Whether Spark can sort on a column of this type: maps and
+    variants cannot, nor arrays or structs that contain them."""
+    if isinstance(dt, (MapType, VariantType)):
+        return False
+    if isinstance(dt, ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return True
 
 
 def top_k(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:

@@ -850,34 +850,6 @@ def semantic_contamination_pairs_split(
     )
 
 
-def decontaminate_semantic(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.35,
-    dim: int = 64,
-    bits: int = 4,
-    n_tables: int = 8,
-    seed: int = 42,
-    bucket_cap: int | None = None,
-) -> DataFrame:
-    """Drop corpus vectors semantically too close to any benchmark
-    vector — kill semantics matching :func:`decontaminate` /
-    :func:`decontaminate_fuzzy`, candidates from
-    :func:`semantic_contamination_pairs`.  The flagged-id list is
-    benchmark-bounded by the probe's cap arithmetic, so the
-    broadcast stays safe at any corpus size."""
-    pairs = semantic_contamination_pairs(
-        corpus, benchmark, id_col, vec_col,
-        threshold, dim, bits, n_tables, seed, bucket_cap,
-    )
-    flagged = pairs.select(F.col("corpus_id").alias(id_col)).distinct()
-    # bcast-ok: semantically-contaminated id list, benchmark-bounded
-    # by the probe's (table, bucket) cap arithmetic (see docstring)
-    return corpus.join(F.broadcast(flagged), id_col, "left_anti")
-
-
 def semantic_block_assign(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -887,9 +859,9 @@ def semantic_block_assign(
     fit_sample_mod: int | None = None,
 ) -> DataFrame:
     """:func:`semantic_dedup`'s fit+assign stage, exposed so
-    diagnostics (tools/scaling_r09c.py's pair-space probes) measure
-    the EXACT deployed blocking rather than a parallel copy that can
-    drift.  Returns the ``(vid, c)`` cluster assignment: exact Lloyd
+    diagnostics (the pair-space probes of SCALING.md "Round-9 SemDeDup
+    blocking sweep") measure the EXACT deployed blocking rather than a
+    parallel copy that can drift.  Returns the ``(vid, c)`` cluster assignment: exact Lloyd
     on everything when ``fit_sample_mod`` is None, else fit on the
     deterministic 1/m id-hash sample and assign via the Arrow numpy
     path (see semantic_dedup's docstring for when to scale the mod)."""
@@ -920,15 +892,17 @@ def semantic_block_assign(
     # ^ the global window collapses the sample to ONE partition;
     # without the repartition the fit's whole map side (explode +
     # decimal partial aggs) runs single-threaded (measured 4.5x on
-    # the k=80 fit in tools/scaling_r09c.py).  The partition COUNT
-    # is explicit because AQE coalesces a column-only repartition
-    # of a small sample right back to one partition (measured).
+    # the k=80 fit, SCALING.md "Round-9 SemDeDup blocking sweep").
+    # The partition COUNT is explicit because AQE coalesces a
+    # column-only repartition of a small sample right back to one
+    # partition (measured).
     _, cent = kmeans_fixed(refit, "__fid", "__fv", k=k, iters=iters)
     # localCheckpoint: the pair stage self-joins on the assignment,
     # so an unchecked mapInPandas lineage would re-run the Python
     # workers once per branch (measured 3.9x at 40k vectors in
-    # tools/scaling_r09c.py) — same discipline as the exact path,
-    # whose assignment kmeans_fixed checkpoints internally
+    # SCALING.md "Round-9 SemDeDup blocking sweep") — same
+    # discipline as the exact path, whose assignment kmeans_fixed
+    # checkpoints internally
     return (
         kmeans_assign_arrow(emb, cent, id_col, vec_col)
         .select("vid", "c")
@@ -952,7 +926,7 @@ def semantic_fit_centroids(
     the one super-linear stage left in the semantic-dedup path, and
     in production it is paid ONCE per model/corpus epoch, not per
     batch — per-batch cost collapses to one broadcast-join assignment
-    pass (measured flat, tools/scaling_r10.py).
+    pass (measured flat, SCALING.md "Round-10 sweeps").
 
     ``update_rounds`` = number of Lloyd UPDATE steps (fit with n-1
     updates + one stored-centroid assignment ≡ ``kmeans_fixed(
@@ -1029,8 +1003,8 @@ def incremental_semantic_dedup(
     the decimal-exact assignment for the numpy fast path
     (clustering.kmeans_assign_arrow) — at scaled k (∝ corpus) the
     exact long-form join is batch·d·k rows and dominates; the Arrow
-    path keeps per-batch cost flat (tools/scaling_r10.py measures
-    it).  The exact path stays the oracle-checked default."""
+    path keeps per-batch cost flat (measured in SCALING.md
+    "Round-10 sweeps").  The exact path stays the oracle-checked default."""
     from square_etl_spark.operators.clustering import (
         kmeans_assign_arrow,
         kmeans_assign_exact,
@@ -1125,8 +1099,9 @@ def semantic_dedup(
 
     The exact long-form assignment join is itself O(N·d·k) rows, so
     k ∝ N makes the ASSIGNMENT quadratic (measured:
-    tools/scaling_r09c.py) — at large k pass ``fit_sample_mod=m`` to
-    fit the centroids on the deterministic 1/m subset
+    SCALING.md "Round-9 SemDeDup blocking sweep") — at large k pass
+    ``fit_sample_mod=m`` to fit the centroids on the deterministic 1/m
+    subset
     (xxhash64(id) % m == 0, re-densified ids for the vid<k seed rule)
     and assign EVERY vector with the Arrow numpy fast path
     (clustering.kmeans_assign_arrow, broadcast k×d matrix, per-row
@@ -1138,7 +1113,8 @@ def semantic_dedup(
     sample SIZE (≈ n/5000), not the fraction: a fixed-fraction sample
     with k ∝ N makes the FIT itself quadratic ((N/m)·d·k rows), which
     at 256-d dominates the whole path — measured in
-    tools/scaling_r09c.py (113.8 s vs 50.9 s at 160 k vectors).
+    SCALING.md "Round-9 SemDeDup at 256-d" (113.8 s vs 50.9 s at
+    160 k vectors).
     """
     from square_etl_spark.operators.similarity import dot, normalize
 
@@ -1410,14 +1386,21 @@ def simhash_word_hashes(col: str = "text") -> F.Column:
     overflow, bit 63 just lands in the sign.  Any engine with md5
     reproduces the signature; the `dedup_simhash` DuckDB oracle
     recomputes the whole pipeline from these bits."""
-    tokens = F.filter(F.split(F.trim(F.col(col)), r"\s+"), lambda t: t != F.lit(""))
+    return F.transform(_simhash_tokens(F.col(col)), _simhash_h64)
 
-    def _h64(t: F.Column) -> F.Column:
-        hi = F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
-        lo = F.conv(F.substring(F.md5(t), 9, 8), 16, 10).cast("long")
-        return F.shiftleft(hi, 32).bitwiseOR(lo)
 
-    return F.transform(tokens, _h64)
+def _simhash_tokens(text: F.Column) -> F.Column:
+    """SimHash's tokenizer: the whitespace split of the trimmed text,
+    empty tokens dropped."""
+    return F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != F.lit(""))
+
+
+def _simhash_h64(token: F.Column) -> F.Column:
+    """SimHash's portable 64-bit token hash: the first 16 hex chars of
+    md5, assembled from two 32-bit halves."""
+    hi = F.conv(F.substring(F.md5(token), 1, 8), 16, 10).cast("long")
+    lo = F.conv(F.substring(F.md5(token), 9, 8), 16, 10).cast("long")
+    return F.shiftleft(hi, 32).bitwiseOR(lo)
 
 
 def simhash64_from_hashes(hashes: F.Column | str) -> F.Column:
@@ -1508,16 +1491,9 @@ def simhash_signatures(
     the filtered split), same per-token arithmetic, and a token-less
     doc's NULL token row hashes to NULL exactly like the old NULL
     hash row (pinned by the relation≡column-spec test)."""
-    words = F.filter(
-        F.split(F.trim(F.col(content_col)), r"\s+"),
-        lambda t: t != F.lit(""),
-    )
+    words = _simhash_tokens(F.col(content_col))
     raw = df.select(F.col(id_col), F.explode_outer(words).alias("__w"))
-    hi = F.conv(F.substring(F.md5(F.col("__w")), 1, 8), 16, 10).cast("long")
-    lo = F.conv(F.substring(F.md5(F.col("__w")), 9, 8), 16, 10).cast("long")
-    toks = raw.select(
-        F.col(id_col), F.shiftleft(hi, 32).bitwiseOR(lo).alias("__h")
-    )
+    toks = raw.select(F.col(id_col), _simhash_h64(F.col("__w")).alias("__h"))
     votes = toks.groupBy(id_col).agg(
         *[
             F.sum(
@@ -2801,8 +2777,8 @@ def substring_dedup(
     every occurrence of a hash to one reducer, so a viral boilerplate
     window — 10⁹ copies of one banner — was a single-task hot key;
     partial aggregation collapses it to one row per map partition
-    before the shuffle, pinned in tools/scaling_r11.py with a planted
-    hot window), one anti join on the uniformly-distributed
+    before the shuffle, measured with a planted hot window in
+    SCALING.md "Round-11 sweeps", finding 1), one anti join on the uniformly-distributed
     ``(id, pos)`` doc key to recover the duplicate occurrences, then
     kill-explode bounded by |duplicate windows|·window —
     proportional to the duplicated volume, not the corpus.  The

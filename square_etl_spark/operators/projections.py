@@ -56,15 +56,6 @@ def valid_quantity_filter(df: DataFrame, qty_col: str) -> DataFrame:
     return df.withColumn(qty_col, q).filter(q.isNotNull() & (q > 0) & ~F.isnan(q))
 
 
-def required_fields_filter(df: DataFrame, *cols: str) -> DataFrame:
-    """P6 (first half): drop rows missing required identifiers, e.g.
-    locations without id or name (src/etl-square-locations.ts:30-33)."""
-    out = df
-    for c in cols:
-        out = out.filter(F.col(c).isNotNull())
-    return out
-
-
 def flatten_address(*parts: Column | str, sep: str = ", ") -> Column:
     """P6/F6: null-skipping string join of struct parts.
 

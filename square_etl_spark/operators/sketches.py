@@ -162,11 +162,3 @@ def bloom_probe_keys(
         .filter(F.col("n_hits") == k)
         .select(key_col)
     )
-
-
-#: oracle-side twin of _md5_mod (DuckDB parses hex via '0x' cast)
-def md5_mod_sql(expr: str, seed: int, mod: int) -> str:
-    return (
-        f"(CAST('0x' || substr(md5('{seed}:' || CAST({expr} AS VARCHAR)),"
-        f" 1, 8) AS BIGINT) % {mod})"
-    )

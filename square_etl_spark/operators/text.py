@@ -24,12 +24,6 @@ def token_count(col: Column | str = "text") -> Column:
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
 
 
-def word_tokens(col: Column | str = "text") -> Column:
-    """BPE-ish word/punct tokenization: letter-digit runs or single
-    non-space symbols — the standard pre-tokenizer split."""
-    return F.regexp_extract_all(_c(col), F.lit(r"[A-Za-z0-9]+|[^\sA-Za-z0-9]"), 0)
-
-
 #: tiny per-language marker lexicons for the n-gram/stopword heuristic.
 #: Ordered dict: ties broken by list order (en first).
 LANG_MARKERS: dict[str, list[str]] = {

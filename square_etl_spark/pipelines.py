@@ -19,8 +19,9 @@ stage downstream is unchanged.
 
 Scale notes: every pipeline is map + (at most) one broadcast join +
 one merge — no unbounded shuffles.  The merge is the only wide stage,
-and at 100 TB it runs partition-restricted
-(:func:`square_etl_spark.sinks.merge.merge_upsert_partitioned`).
+and for the fact tables it runs partition-restricted
+(:func:`square_etl_spark.sinks.merge.merge_upsert` with
+``partition_col``, routed by :data:`FACT_PARTITION`).
 
 Reference parity map:
   payments    — src/etl-square-payments.ts:27-47 (map), 130-138 (main)
@@ -47,7 +48,7 @@ from square_etl_spark.operators.projections import (
 )
 from square_etl_spark.operators.quality import quarantine_split
 from square_etl_spark.schemas import WAREHOUSE_TABLES
-from square_etl_spark.sinks.merge import merge_upsert, merge_upsert_partitioned
+from square_etl_spark.sinks.merge import merge_upsert
 
 #: the reference's env-driven tenancy constants with their defaults
 #: (src/etl-square-payments.ts:8-11).
@@ -114,8 +115,8 @@ def payments_pipeline(
 
     ``with_part_date`` appends ``part_date = to_date(created_at)`` for
     the partition-restricted merge path (run_pipeline): payment
-    creation date is immutable per natural key, the invariant
-    merge_upsert_partitioned requires."""
+    creation date is immutable per natural key, the invariant the
+    partition-restricted merge requires."""
     money = coalesce_first("total_amount", "amount_amount")
     mapped = source.withColumn("amount", money)
     good, rejects = quarantine_split(
@@ -200,7 +201,7 @@ def order_items_pipeline(
     for the partition-restricted merge path: order date is immutable
     per (order_id, line_item_uid) natural key — order_id is IN the
     key, and the first-wins payment choice is deterministic — so the
-    merge_upsert_partitioned invariant holds.
+    partition-restricted merge's invariant holds.
     """
     o2p_cols = ["order_id", "payment_id"] + (
         ["created_at"] if with_part_date else []
@@ -461,13 +462,13 @@ def locations_pipeline(source: DataFrame) -> tuple[DataFrame, DataFrame]:
 # ---------------------------------------------------------------------------
 
 
-#: fact table → its partition column for the partition-restricted
-#: merge path.  Dimensions (catalog/categories/locations) stay on the
-#: full merge — they are small.  Payments/order-items partition by the
-#: derived ``part_date`` (creation date, immutable per natural key),
-#: so an hourly 24 h-lookback batch rewrites ~1 day of partitions
-#: instead of the whole table — the difference between O(batch) and
-#: O(table) I/O per run at 100 TB.  Inventory's timestamp
+#: fact table → the ``partition_col`` run_pipeline passes to
+#: merge_upsert.  Dimensions (catalog/categories/locations) are not
+#: listed and merge as one slice — they are small.  Payments/order-items
+#: partition by the derived ``part_date`` (creation date, immutable per
+#: natural key), so an hourly 24 h-lookback batch rewrites ~1 day of
+#: partitions instead of the whole table — the difference between
+#: O(batch) and O(table) I/O per run at 100 TB.  Inventory's timestamp
 #: (calculated_at) MUTATES per key and would violate the partition
 #: invariant, but ``location_id`` is IN its natural key — immutable by
 #: definition — so inventory partitions by location: a sync touching a
@@ -485,34 +486,22 @@ def run_pipeline(
     table: str,
     rows: DataFrame,
     target_path: str,
-    partition_col: str | None = None,
 ) -> int:
     """Merge pipeline output into its warehouse table (the reference's
     BEGIN → ON CONFLICT upsert loop → COMMIT, src/etl-square-payments.ts
     :49-128).  Key + last-writer order come from the declared schema
-    registry; returns rows in the target after the merge.
+    registry; returns the rows merge_upsert wrote.
 
-    Routing: fact tables (FACT_PARTITION) go through the
-    partition-restricted merge automatically when their pipeline was
-    built ``with_part_date=True`` — pass ``partition_col`` explicitly
-    to override, or build dims without one to get the full merge."""
+    Routing: the table's FACT_PARTITION column, when ``rows`` carries
+    it, is the merge's ``partition_col`` (a fact pipeline built
+    ``with_part_date=True``, or inventory); every other table merges
+    as one slice."""
     _, key = WAREHOUSE_TABLES[table]
     order_cols = [c for c in ("updated_at", "calculated_at") if c in rows.columns]
-    if partition_col is None:
-        default_part = FACT_PARTITION.get(table)
-        if default_part is not None and default_part in rows.columns:
-            partition_col = default_part
-    if partition_col is not None:
-        return merge_upsert_partitioned(
-            spark,
-            target_path,
-            rows,
-            keys=key,
-            order_cols=order_cols or key,
-            partition_col=partition_col,
-        )
+    partition_col = FACT_PARTITION.get(table)
     return merge_upsert(
-        spark, target_path, rows, keys=key, order_cols=order_cols or key
+        spark, target_path, rows, keys=key, order_cols=order_cols or key,
+        partition_col=partition_col if partition_col in rows.columns else None,
     )
 
 

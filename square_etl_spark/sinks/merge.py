@@ -9,38 +9,45 @@ short-circuit (K3).  Net effect: last-writer-wins per natural key,
 idempotent under replay — which is what makes the 24 h lookback
 re-scan safe (SURVEY.md §2.8 T2).
 
-Spark-first design (no Delta dependency — plain parquet):
+Spark-first design (no Delta dependency — plain parquet).  The pure
+merge, :func:`merge_dataframes`, is MERGE INTO re-expressed as:
 
 1. dedup the incoming batch to one row per key (last-writer-wins
    within the batch, deterministic via order columns — the reference
    gets this from arrival order, we re-specify it);
-2. read the current target, keep only target rows whose key does NOT
-   appear in the batch (left-anti join);
-3. union and atomically overwrite (write to a temp dir, then swap).
+2. keep only target rows whose key does NOT appear in the batch
+   (left-anti join);
+3. union.
 
-This is MERGE INTO re-expressed as anti-join + union; on a real
-deployment the same ``merge_dataframes`` logic backs a Delta/Iceberg
-``MERGE INTO`` where the table format gives true atomic commits and,
-at 100 TB, partition-level rewrite instead of full-table overwrite
-(partition the target by tenant/date and restrict step 2-3 to the
-partitions present in the batch — the batch is a 24 h window, so only
-~1 day of partitions rewrite).
+:func:`merge_upsert` is the one materialized upsert sink.  It runs the
+pure merge inside a single locked read → merge → stage → swap routine
+(:func:`_locked_merge`, shared with the change-feed sink
+:func:`cdc_merge`): empty check, writer lock, crash recovery, target
+read, staged write counted on the write job, rename-only swap.  The
+table layout is the routine's only branch: ``partition_col=None``
+merges and swaps the whole directory; a partition column reads and
+swaps only the partitions the batch touches (a 24 h batch rewrites ~1
+day of partitions).  On a real deployment the same pure merge backs a
+Delta/Iceberg ``MERGE INTO`` where the table format gives true atomic
+commits.
 """
 
 from __future__ import annotations
 
 import contextlib
+import glob
 import json
 import os
 import shutil
 import socket
-import tempfile
 import time
 import uuid
 import warnings
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from square_etl_spark.operators.aggregations import last_writer_wins
 
@@ -297,8 +304,6 @@ def _recover_swap(target_path: str) -> None:
     Stale ``target.tmp-*`` staging dirs from crashed writes are swept
     here too — they are only ever referenced within a single call.
     """
-    import glob
-
     old = target_path + ".old"
     if os.path.exists(old):
         if os.path.exists(target_path):
@@ -359,7 +364,8 @@ def merge_dataframes(
     """Pure (DataFrame in → DataFrame out) MERGE: last-writer-wins.
 
     ``order_cols`` decides which batch row wins within the batch
-    (descending; ties broken by the key itself).  If ``stamp_updated_at``
+    (descending; ties broken by the non-key columns, see
+    :func:`last_writer_wins`).  If ``stamp_updated_at``
     (K2), rows that replace an existing target row get
     ``updated_at = current_timestamp()``, inserts keep theirs — matching
     the reference's update-branch-only stamp
@@ -418,17 +424,93 @@ def merge_dataframes(
     return survivors.unionByName(deduped)
 
 
+def _locked_merge(
+    spark: SparkSession,
+    target_path: str,
+    batch: DataFrame,
+    target_schema: StructType,
+    merge: Callable[[DataFrame | None], DataFrame],
+    partition_col: str | None,
+    lock_timeout_s: float,
+) -> int:
+    """The one materialized MERGE behind :func:`merge_upsert` and
+    :func:`cdc_merge`: empty check → writer lock → crash recovery →
+    read target → ``merge(target)`` (a pure merge of the batch onto the
+    target, ``None`` when there is none) → staged counted write → swap.
+
+    Only two steps depend on the table layout.  With ``partition_col``
+    None the whole directory is the slice and is swapped once.  With a
+    column name the read is restricted to the partitions the batch
+    touches and each touched partition directory is swapped on its own;
+    untouched partitions are never opened or rewritten.
+    """
+    if partition_col is None:
+        if batch.isEmpty():
+            return 0
+    else:
+        # the touched values (driver-side, bounded by the partition
+        # count) double as the K3 emptiness check: no extra batch job
+        touched = [r[0] for r in batch.select(partition_col).distinct().collect()]
+        if not touched:
+            return 0
+    with _table_lock(target_path, timeout_s=lock_timeout_s):
+        _recover_swap(target_path)
+        if partition_col is not None:
+            # repair any partition-dir swap a previous crash interrupted
+            for old in glob.glob(os.path.join(target_path, "*.old")):
+                _recover_swap(old[: -len(".old")])
+        target = None
+        if os.path.exists(target_path):
+            reader = spark.read.schema(target_schema)
+            if partition_col is None:
+                target = reader.parquet(target_path)
+            else:
+                # NULL partition values land in hive's
+                # __HIVE_DEFAULT_PARTITION__ dir.  ``isin`` never matches
+                # NULL (three-valued logic), so without the explicit
+                # isNull branch the target's NULL-partition rows would be
+                # excluded from the merge slice while the swap below
+                # still replaced their directory — silently dropping them.
+                non_null = [t for t in touched if t is not None]
+                slice_cond = (
+                    F.col(partition_col).isin(non_null) if non_null else F.lit(False)
+                )
+                if len(non_null) != len(touched):
+                    slice_cond = slice_cond | F.col(partition_col).isNull()
+                target = (
+                    reader.option("basePath", target_path)
+                    .parquet(target_path)
+                    .filter(slice_cond)
+                )
+        tmp = _staging_dir(target_path)
+        n = _write_counted(merge(target), tmp, partition_col)
+        if target is None or partition_col is None:
+            _swap_into(tmp, target_path)
+            return n
+        # swap ONLY the partition dirs the batch touched (tmp holds
+        # exactly the touched values by construction — merged == slice
+        # ∪ batch); each publish is the rename-only _swap_into protocol
+        # (atomic per partition, crash-recoverable via the *.old sweep)
+        for entry in os.listdir(tmp):
+            if entry.startswith(f"{partition_col}="):
+                _swap_into(os.path.join(tmp, entry), os.path.join(target_path, entry))
+        shutil.rmtree(tmp, ignore_errors=True)
+        return n
+
+
 def merge_upsert(
     spark: SparkSession,
     target_path: str,
     batch: DataFrame,
     keys: list[str],
     order_cols: list[str],
+    partition_col: str | None = None,
     stamp_updated_at: bool = False,
     lock_timeout_s: float = 600.0,
     batch_ts: str | None = None,
 ) -> int:
-    """Materialized MERGE into a parquet path; returns rows written.
+    """Materialized MERGE into a parquet path; returns rows written
+    (the whole table, or with ``partition_col`` the touched slice).
 
     Atomicity (E3, the reference's BEGIN/COMMIT): the merged result is
     written to a sibling staging dir first, then published with the
@@ -444,23 +526,27 @@ def merge_upsert(
     so a waiting writer merges onto the winner's published rows —
     interleaved calls compose instead of last-swap-wins dropping a
     batch; lock starvation raises :class:`ConcurrentWriterError`.
+
+    ``partition_col`` makes the target a hive-layout table
+    (``target/<col>=<val>/``) and restricts the merge to the partitions
+    the batch touches — the 100 TB-shaped upsert (SURVEY.md hard-list
+    #1): a 24 h batch rewrites ~1 day of partitions, and untouched
+    partition directories stay byte-identical on disk.  INVARIANT the
+    caller owns: ``partition_col`` must be immutable per natural key
+    (creation date, tenant id) — a key that moved partitions would
+    leave its old row in an untouched partition.  This is the standard
+    constraint of partition-scoped MERGE (Delta/Iceberg ``ON ... AND
+    target.part IN (...)``).  Atomicity is then per partition: a
+    mid-swap failure leaves earlier partitions new and later ones old,
+    each internally consistent, and re-running converges.
     """
-    if batch.isEmpty():
-        return 0
-    with _table_lock(target_path, timeout_s=lock_timeout_s):
-        _recover_swap(target_path)
-        target = (
-            spark.read.schema(batch.schema).parquet(target_path)
-            if os.path.exists(target_path)
-            else None
-        )
-        merged = merge_dataframes(
+    return _locked_merge(
+        spark, target_path, batch, batch.schema,
+        lambda target: merge_dataframes(
             target, batch, keys, order_cols, stamp_updated_at, batch_ts
-        )
-        tmp = _staging_dir(target_path)
-        n = _write_counted(merged, tmp)
-        _swap_into(tmp, target_path)
-        return n
+        ),
+        partition_col, lock_timeout_s,
+    )
 
 
 def cdc_merge_dataframes(
@@ -502,21 +588,11 @@ def cdc_merge(
     """Materialized CDC MERGE with the same crash-consistent staging
     swap as :func:`merge_upsert` (E3).  The stored target does NOT
     carry ``op_col`` — it exists only on the change feed."""
-    if batch.isEmpty():
-        return 0
-    with _table_lock(target_path, timeout_s=lock_timeout_s):
-        _recover_swap(target_path)
-        target_schema = batch.drop(op_col).schema
-        target = (
-            spark.read.schema(target_schema).parquet(target_path)
-            if os.path.exists(target_path)
-            else None
-        )
-        merged = cdc_merge_dataframes(target, batch, keys, order_cols, op_col)
-        tmp = _staging_dir(target_path)
-        n = _write_counted(merged, tmp)
-        _swap_into(tmp, target_path)
-        return n
+    return _locked_merge(
+        spark, target_path, batch, batch.drop(op_col).schema,
+        lambda target: cdc_merge_dataframes(target, batch, keys, order_cols, op_col),
+        None, lock_timeout_s,
+    )
 
 
 def snapshot_diff(
@@ -572,120 +648,6 @@ def snapshot_diff(
             *[F.col(f"__n_{c}").alias(c) for c in compare_cols],
         )
     )
-
-
-def merge_upsert_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    batch: DataFrame,
-    keys: list[str],
-    order_cols: list[str],
-    partition_col: str,
-    stamp_updated_at: bool = False,
-    lock_timeout_s: float = 600.0,
-    batch_ts: str | None = None,
-) -> int:
-    """Partition-restricted MERGE: rewrite only the partitions the batch
-    touches — the 100 TB-shaped upsert (SURVEY.md hard-list #1).
-
-    The target is a hive-layout parquet table partitioned by
-    ``partition_col`` (``target/<col>=<val>/``).  A 24 h incremental
-    batch touches ~1 day of partition values, so the merge:
-
-    1. collects the batch's DISTINCT partition values (driver-side,
-       bounded — it is the number of touched partitions, not rows);
-    2. reads ONLY those partitions of the target (the ``isin`` filter
-       is partition pruning — untouched partitions are never opened);
-    3. anti-join + union within the touched slice (same
-       :func:`merge_dataframes` semantics as the full merge);
-    4. writes the slice to a temp dir and swaps each touched partition
-       directory individually.  Untouched partition directories are
-       left byte-identical on disk (pinned in tests/test_merge.py).
-
-    INVARIANT the caller owns: ``partition_col`` must be immutable per
-    natural key (creation date, tenant id) — if a key could move
-    between partitions, its old row would survive in an untouched
-    partition.  This is the standard constraint for partition-scoped
-    MERGE (Delta/Iceberg ``ON ... AND target.part IN (...)`` has the
-    same one).
-
-    Atomicity is per partition (each swap is a dir move); a mid-swap
-    failure leaves earlier partitions new and later ones old, but every
-    partition is internally consistent and the merge is idempotent —
-    re-running converges.  A real deployment gets table-level commits
-    from Delta/Iceberg; plain parquet cannot.
-    """
-    import glob
-
-    if batch.isEmpty():
-        return 0
-    with _table_lock(target_path, timeout_s=lock_timeout_s):
-        return _merge_upsert_partitioned_locked(
-            spark, target_path, batch, keys, order_cols, partition_col,
-            stamp_updated_at, batch_ts,
-        )
-
-
-def _merge_upsert_partitioned_locked(
-    spark: SparkSession,
-    target_path: str,
-    batch: DataFrame,
-    keys: list[str],
-    order_cols: list[str],
-    partition_col: str,
-    stamp_updated_at: bool,
-    batch_ts: str | None = None,
-) -> int:
-    """Body of :func:`merge_upsert_partitioned` under the writer lock —
-    same serialization contract as :func:`merge_upsert` (the
-    per-partition swaps are reader-atomic; two unserialized writers
-    would still read one base and drop each other's rows)."""
-    import glob
-
-    # repair any partition-dir swap a previous crash interrupted, and
-    # sweep staging dirs a crashed run left beside the target
-    for old in glob.glob(os.path.join(target_path, "*.old")):
-        _recover_swap(old[: -len(".old")])
-    for stale in glob.glob(target_path + ".tmp-*"):
-        shutil.rmtree(stale, ignore_errors=True)
-    touched = [r[0] for r in batch.select(partition_col).distinct().collect()]
-    if not os.path.exists(target_path):
-        batch_dedup = merge_dataframes(None, batch, keys, order_cols)
-        return _write_counted(batch_dedup, target_path, partition_col)
-
-    # NULL partition values land in hive's __HIVE_DEFAULT_PARTITION__
-    # dir.  ``isin`` never matches NULL (three-valued logic), so without
-    # the explicit isNull branch the target's NULL-partition rows would
-    # be excluded from the merge slice while the swap below still
-    # replaced their directory — silently dropping them.
-    non_null = [t for t in touched if t is not None]
-    slice_cond = (
-        F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    )
-    if len(non_null) != len(touched):  # batch touches the NULL partition
-        slice_cond = slice_cond | F.col(partition_col).isNull()
-    target_slice = (
-        spark.read.schema(batch.schema)
-        .option("basePath", target_path)
-        .parquet(target_path)
-        .filter(slice_cond)
-    )
-    merged = merge_dataframes(
-        target_slice, batch, keys, order_cols, stamp_updated_at, batch_ts
-    )
-    tmp = _staging_dir(target_path)
-    n = _write_counted(merged, tmp, partition_col)
-    # swap ONLY the partition dirs the batch touched (tmp holds exactly
-    # the touched values by construction — merged == slice ∪ batch);
-    # tmp is a sibling of the target, so each per-partition publish is
-    # the same rename-only _swap_into protocol (atomic per partition,
-    # crash-recoverable via the *.old sweep above)
-    for entry in os.listdir(tmp):
-        if not entry.startswith(f"{partition_col}="):
-            continue
-        _swap_into(os.path.join(tmp, entry), os.path.join(target_path, entry))
-    shutil.rmtree(tmp, ignore_errors=True)
-    return n
 
 
 def scd2_merge(

@@ -44,6 +44,36 @@ def test_merge_dedups_batch_last_writer_wins(spark):
     assert [(r.k, r.v) for r in out] == [("a", 2)]
 
 
+def test_last_writer_wins_breaks_ties_on_payload(spark):
+    """Rows tied on every order column resolve by the non-key columns
+    ascending (NULLs last), so the winner does not depend on shuffle
+    partitioning or input order; where the order column decides, the
+    newest row still wins whatever its payload."""
+    from square_etl_spark.operators.aggregations import last_writer_wins
+
+    rows = [
+        ("a", 2, "x", "2024-01-01 00:00:00"),
+        ("a", 1, "y", "2024-01-01 00:00:00"),
+        ("a", 1, None, "2024-01-01 00:00:00"),
+        ("b", 1, "a", "2024-01-01 00:00:00"),
+        ("b", 9, "z", "2024-01-02 00:00:00"),
+    ]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    winners = set()
+    try:
+        for parts in ("3", "17"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            for ordered in (rows, rows[::-1]):
+                batch = spark.createDataFrame(
+                    ordered, "k string, v long, s string, updated_at string"
+                )
+                out = last_writer_wins(batch, ["k"], ["updated_at"]).collect()
+                winners.add(tuple(sorted((r.k, r.v, r.s) for r in out)))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert winners == {(("a", 1, "y"), ("b", 9, "z"))}
+
+
 def test_merge_upsert_idempotent(spark, tmp_path):
     target = os.path.join(tmp_path, "tbl")
     batch = spark.createDataFrame(
@@ -154,22 +184,20 @@ def _pbatch(spark, rows):
 
 
 def test_partitioned_merge_rewrites_only_touched_partitions(spark, tmp_path):
-    from square_etl_spark.sinks.merge import merge_upsert_partitioned
-
     target = os.path.join(tmp_path, "tbl")
     seed = _pbatch(spark, [
         ("a", 1, "2024-01-01 00:00:00", "2024-01-01"),
         ("b", 2, "2024-01-01 00:00:00", "2024-01-01"),
         ("c", 3, "2024-01-02 00:00:00", "2024-01-02"),
     ])
-    merge_upsert_partitioned(spark, target, seed, ["k"], ["updated_at"], "day")
+    merge_upsert(spark, target, seed, ["k"], ["updated_at"], partition_col="day")
     day1_before = _pfiles(target, "2024-01-01")
 
     batch = _pbatch(spark, [
         ("c", 30, "2024-01-02 12:00:00", "2024-01-02"),
         ("d", 40, "2024-01-02 12:00:00", "2024-01-02"),
     ])
-    n = merge_upsert_partitioned(spark, target, batch, ["k"], ["updated_at"], "day")
+    n = merge_upsert(spark, target, batch, ["k"], ["updated_at"], partition_col="day")
     assert n == 2  # rows written = touched-slice size, not table size
 
     # untouched partition: files byte-identical (not rewritten)
@@ -183,15 +211,13 @@ def test_partitioned_merge_rewrites_only_touched_partitions(spark, tmp_path):
 
 
 def test_partitioned_merge_idempotent(spark, tmp_path):
-    from square_etl_spark.sinks.merge import merge_upsert_partitioned
-
     target = os.path.join(tmp_path, "tbl")
     batch = _pbatch(spark, [
         ("a", 1, "2024-01-01 00:00:00", "2024-01-01"),
         ("c", 3, "2024-01-02 00:00:00", "2024-01-02"),
     ])
-    n1 = merge_upsert_partitioned(spark, target, batch, ["k"], ["updated_at"], "day")
-    n2 = merge_upsert_partitioned(spark, target, batch, ["k"], ["updated_at"], "day")
+    n1 = merge_upsert(spark, target, batch, ["k"], ["updated_at"], partition_col="day")
+    n2 = merge_upsert(spark, target, batch, ["k"], ["updated_at"], partition_col="day")
     got = {
         (r.k, r.v)
         for r in spark.read.schema(PSCHEMA)
@@ -207,22 +233,20 @@ def test_partitioned_merge_null_partition_rows_survive(spark, tmp_path):
     explicit isNull branch the target's prior NULL-partition rows were
     excluded from the merge slice while the swap still replaced their
     directory — silent data loss (r03 ADVICE, medium)."""
-    from square_etl_spark.sinks.merge import merge_upsert_partitioned
-
     target = os.path.join(tmp_path, "tbl")
     seed = _pbatch(spark, [
         ("a", 1, "2024-01-01 00:00:00", "2024-01-01"),
         ("n1", 9, "2024-01-01 00:00:00", None),   # NULL partition
         ("n2", 8, "2024-01-01 00:00:00", None),
     ])
-    merge_upsert_partitioned(spark, target, seed, ["k"], ["updated_at"], "day")
+    merge_upsert(spark, target, seed, ["k"], ["updated_at"], partition_col="day")
 
     # batch touches the NULL partition: updates n1, inserts n3 — n2 must survive
     batch = _pbatch(spark, [
         ("n1", 90, "2024-01-02 00:00:00", None),
         ("n3", 7, "2024-01-02 00:00:00", None),
     ])
-    n = merge_upsert_partitioned(spark, target, batch, ["k"], ["updated_at"], "day")
+    n = merge_upsert(spark, target, batch, ["k"], ["updated_at"], partition_col="day")
     assert n == 3  # n1 (updated) + n2 (survivor) + n3 (insert)
     got = {
         (r.k, r.v)
@@ -240,7 +264,7 @@ def test_partitioned_merge_null_partition_rows_survive(spark, tmp_path):
         for f in os.listdir(null_dir) if f.endswith(".parquet")
     )
     batch2 = _pbatch(spark, [("a", 11, "2024-01-03 00:00:00", "2024-01-01")])
-    merge_upsert_partitioned(spark, target, batch2, ["k"], ["updated_at"], "day")
+    merge_upsert(spark, target, batch2, ["k"], ["updated_at"], partition_col="day")
     after = sorted(
         (f, hashlib.sha256(open(os.path.join(null_dir, f), "rb").read()).hexdigest())
         for f in os.listdir(null_dir) if f.endswith(".parquet")
@@ -249,14 +273,14 @@ def test_partitioned_merge_null_partition_rows_survive(spark, tmp_path):
 
 
 def test_partitioned_merge_empty_batch_short_circuits(spark, tmp_path):
-    from square_etl_spark.sinks.merge import merge_upsert_partitioned
-
     target = os.path.join(tmp_path, "tbl")
     empty = spark.createDataFrame([], PSCHEMA)
-    assert merge_upsert_partitioned(
-        spark, target, empty, ["k"], ["updated_at"], "day"
+    assert merge_upsert(
+        spark, target, empty, ["k"], ["updated_at"], partition_col="day"
     ) == 0
     assert not os.path.exists(target)
+    # decided before the writer lock: no lock dir is left behind either
+    assert not os.path.exists(target + ".lock")
 
 
 def test_merge_upsert_counts_on_write_no_reread_job(spark, tmp_path):
@@ -281,6 +305,61 @@ def test_merge_upsert_counts_on_write_no_reread_job(spark, tmp_path):
     assert n1 == n2 == 2
     assert fresh_jobs <= 3, f"fresh merge ran {fresh_jobs} jobs (re-read crept back?)"
     assert existing_jobs <= 6, f"existing merge ran {existing_jobs} jobs"
+
+
+def test_partitioned_merge_counts_on_write_one_batch_job_fewer(spark, tmp_path):
+    """Partitioned twin of the job pin above.  The touched-partition
+    collect is also the emptiness check, so a partitioned merge runs no
+    separate ``isEmpty`` job over the batch lineage: the bounds sit one
+    job below the earlier shape (5 fresh / 8 existing)."""
+    target = os.path.join(tmp_path, "tbl")
+    batch = _pbatch(spark, [
+        ("a", 1, "2024-01-01 00:00:00", "2024-01-01"),
+        ("b", 2, "2024-01-01 00:00:00", "2024-01-01"),
+    ])
+    sc = spark.sparkContext
+    sc.setJobGroup("pmerge-fresh", "partitioned merge, fresh target")
+    n1 = merge_upsert(spark, target, batch, ["k"], ["updated_at"], partition_col="day")
+    fresh_jobs = len(sc.statusTracker().getJobIdsForGroup("pmerge-fresh"))
+    sc.setJobGroup("pmerge-existing", "partitioned merge, existing target")
+    n2 = merge_upsert(spark, target, batch, ["k"], ["updated_at"], partition_col="day")
+    existing_jobs = len(sc.statusTracker().getJobIdsForGroup("pmerge-existing"))
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n1 == n2 == 2
+    assert fresh_jobs <= 4, f"fresh partitioned merge ran {fresh_jobs} jobs"
+    assert existing_jobs <= 7, f"existing partitioned merge ran {existing_jobs} jobs"
+
+
+def test_partitioned_first_write_failure_leaves_no_partial_table(spark, tmp_path):
+    """A first write to a partitioned table is staged and swapped like
+    every other write: when it fails mid-job, no half-written table
+    appears at the target path, and the next merge starts clean."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    target = os.path.join(tmp_path, "tbl")
+    good = _pbatch(spark, [
+        ("a", 1, "2024-01-01 00:00:00", "2024-01-01"),
+        ("b", 2, "2024-01-02 00:00:00", "2024-01-02"),
+    ])
+    poison = good.withColumn(
+        "v",
+        F.when(F.col("v") >= 0, F.raise_error("injected write failure")).otherwise(
+            F.lit(0)
+        ).cast("long"),
+    )
+    with pytest.raises(Exception, match="injected write failure"):
+        merge_upsert(spark, target, poison, ["k"], ["updated_at"], partition_col="day")
+    assert not os.path.exists(target)
+    assert merge_upsert(
+        spark, target, good, ["k"], ["updated_at"], partition_col="day"
+    ) == 2
+    got = {
+        (r.k, r.v)
+        for r in spark.read.schema(PSCHEMA)
+        .option("basePath", target).parquet(target).collect()
+    }
+    assert got == {("a", 1), ("b", 2)}
 
 
 # ---------------------------------------------------------------------------
