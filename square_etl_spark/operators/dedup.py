@@ -1213,6 +1213,13 @@ def connected_components(
     aggregations keyed by node id; at scale co-partitioning on that
     key makes rounds local.
 
+    ``min_label`` computes round 1 from the edges alone (every label
+    starts as the node id, so round 1 is ``least(node, min(dst))`` per
+    ``src``), with its change count observed on the same checkpoint
+    job; only rounds 2+ join labels back onto the edges.  Round 1
+    always runs, so ``rounds`` is at least 1 — an empty edge set stops
+    there.
+
     ``stats``, if given, is populated in place with ``{"algorithm",
     "rounds"}`` — per-call observability (a module global here would
     race if two CC runs interleaved on one driver).
@@ -1234,14 +1241,24 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
+    # Round 1 needs no join: every label starts as the node id, so a
+    # node's first label is least(node, min neighbour) straight from the
+    # edges — no identity-label table to materialize.
+    obs = Observation()
     labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
+        edges.groupBy("src")
+        .agg(F.min("dst").alias("__m"))
+        .select(
+            F.col("src").alias("node"),
+            F.least(F.col("src"), F.col("__m")).alias("label"),
+        )
+        .observe(obs, _cc_changed("node"))
         .localCheckpoint(eager=True)
     )
-    rounds = 0
-    for rounds in range(1, max_iterations + 1):
+    changed = obs.get["changed"]
+    rounds = 1
+    while changed and rounds < max_iterations:
+        rounds += 1
         nbr = edges.join(
             labels.withColumnRenamed("node", "dst"), on="dst"
         ).select(F.col("src").alias("node"), "label")
@@ -1256,36 +1273,31 @@ def connected_components(
             nbr.select("node", F.col("label").alias("lbl"), F.lit(0).alias("w"))
         )
         obs = Observation()
-        new_labels = (
+        labels = (
             combined.groupBy("node")
             .agg(
                 F.min("lbl").alias("label"),
                 F.max(F.when(F.col("w") == 1, F.col("lbl"))).alias("__old"),
             )
-            .observe(
-                obs,
-                # coalesce: SUM over zero rows is NULL, and an empty
-                # edge set would otherwise never satisfy changed == 0
-                # and spin all max_iterations rounds (r03 ADVICE).
-                F.coalesce(
-                    F.sum(
-                        F.when(F.col("label") < F.col("__old"), 1).otherwise(0)
-                    ),
-                    F.lit(0),
-                ).alias("changed"),
-            )
+            .observe(obs, _cc_changed("__old"))
             .drop("__old")
             .localCheckpoint(eager=True)
         )
         changed = obs.get["changed"]
-        labels = new_labels
-        if not changed:
-            break
     if stats is not None:
         stats.update(algorithm="min_label", rounds=rounds)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
+
+
+def _cc_changed(old: str) -> Column:
+    """Observed count of nodes whose ``label`` fell below ``old``.
+    coalesce: SUM over zero rows is NULL, and an empty edge set would
+    otherwise never satisfy changed == 0 (r03 ADVICE)."""
+    return F.coalesce(
+        F.sum(F.when(F.col("label") < F.col(old), 1).otherwise(0)), F.lit(0)
+    ).alias("changed")
 
 
 def _cc_star(
@@ -1490,26 +1502,37 @@ def simhash_signatures(
     md5 per token.  Values identical: same tokens (explode_outer of
     the filtered split), same per-token arithmetic, and a token-less
     doc's NULL token row hashes to NULL exactly like the old NULL
-    hash row (pinned by the relation≡column-spec test)."""
+    hash row (pinned by the relation≡column-spec test).
+
+    Each of the 64 votes and the signature's left-deep OR chain is
+    built from one SQL string (``F.expr``), not from Column calls: the
+    driver makes a few hundred py4j round trips per build instead of
+    ~10 000, and the optimized plan is identical
+    (``plans/driver_cost/dedup_simhash_{before,after}.txt``)."""
     words = _simhash_tokens(F.col(content_col))
     raw = df.select(F.col(id_col), F.explode_outer(words).alias("__w"))
     toks = raw.select(F.col(id_col), _simhash_h64(F.col("__w")).alias("__h"))
     votes = toks.groupBy(id_col).agg(
         *[
-            F.sum(
-                F.when(F.getbit(F.col("__h"), F.lit(i)) == 1, 1).otherwise(-1)
-            ).alias(f"__v{i}")
+            F.expr(
+                f"sum(CASE WHEN getbit(__h, {i}) = 1 THEN 1 ELSE -1 END)"
+                f" AS __v{i}"
+            )
             for i in range(64)
         ]
     )
-    sig = F.lit(0).cast("long")
-    for i in range(64):
-        p = (1 << i) if i < 63 else -(1 << 63)
-        sig = sig.bitwiseOR(
-            F.when(F.col(f"__v{i}") > 0, F.lit(p).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-        )
-    return votes.select(F.col(id_col), sig.alias("sig"))
+    # left-deep OR of 2^i for positive-vote bits; bit 63's power is
+    # long-min in two's complement (1<<63 overflows)
+    pow2 = [(1 << i) if i < 63 else -(1 << 63) for i in range(64)]
+    sig = " | ".join(
+        ["CAST(0 AS BIGINT)"]
+        + [
+            f"CASE WHEN __v{i} > 0 THEN CAST({p} AS BIGINT)"
+            " ELSE CAST(0 AS BIGINT) END"
+            for i, p in enumerate(pow2)
+        ]
+    )
+    return votes.select(F.col(id_col), F.expr(sig).alias("sig"))
 
 
 def simhash_near_dup_pairs(

@@ -605,6 +605,8 @@ def pq_encode(
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     from square_etl_spark.operators.clustering import kmeans_fixed
 
     ds = dim // m
@@ -618,8 +620,17 @@ def pq_encode(
         )
         return kmeans_fixed(sub, id_col, vec_col, k=ksub, iters=iters)
 
+    # each callable is wrapped at submit time so its jobs carry the
+    # caller's job group (cancellation, attribution); every wrap takes
+    # its own copy of the local properties, so concurrent SQL
+    # executions never share one
+    session = vectors.sparkSession
     with ThreadPoolExecutor(max_workers=min(m, 4)) as pool:
-        fits = list(pool.map(_fit, range(m)))
+        futs = [
+            pool.submit(inheritable_thread_target(session)(_fit), s)
+            for s in range(m)
+        ]
+        fits = [f.result() for f in futs]
     codes = None
     codebooks = None
     for s, (assign, cent) in enumerate(fits):
@@ -765,6 +776,8 @@ def ivfpq_index(
     (:func:`topk_from_pq`)."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     from square_etl_spark.operators.clustering import kmeans_fixed
 
     ds = dim // m
@@ -772,13 +785,17 @@ def ivfpq_index(
         raise ValueError(f"m={m} must divide dim={dim}")
     # the coarse Lloyd chain and the m PQ-subspace chains are mutually
     # independent — overlap them (r16; guide §2.6), same rationale and
-    # value-neutrality as pq_encode's internal pool
+    # value-neutrality as pq_encode's internal pool, and the same
+    # submit-time wrapping so the chains' jobs keep the caller's group
+    session = vectors.sparkSession
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_coarse = pool.submit(
-            kmeans_fixed, vectors, id_col, vec_col, k=n_cells, iters=iters
+            inheritable_thread_target(session)(kmeans_fixed),
+            vectors, id_col, vec_col, k=n_cells, iters=iters,
         )
         f_pq = pool.submit(
-            pq_encode, vectors, dim, m=m, ksub=ksub, iters=iters,
+            inheritable_thread_target(session)(pq_encode),
+            vectors, dim, m=m, ksub=ksub, iters=iters,
             id_col=id_col, vec_col=vec_col,
         )
         cells, coarse_cent = f_coarse.result()

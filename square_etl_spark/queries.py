@@ -7080,11 +7080,16 @@ def _ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     with ThreadPoolExecutor(max_workers=4) as pool:
-        fb = pool.submit(_ann_brute, spark, sf_dir)
-        fl = pool.submit(_ann_lsh, spark, sf_dir)
-        fi = pool.submit(_ann_ivf, spark, sf_dir)
-        fp = pool.submit(_ann_ivfpq, spark, sf_dir)
+        # wrapped at submit time, one copy of the local properties each:
+        # the builders' jobs keep the caller's job group (cancellation,
+        # attribution)
+        fb, fl, fi, fp = (
+            pool.submit(inheritable_thread_target(spark)(fn), spark, sf_dir)
+            for fn in (_ann_brute, _ann_lsh, _ann_ivf, _ann_ivfpq)
+        )
         brute = fb.result().select("query_id", "vec_id")
         lsh = fl.result().select("query_id", "vec_id")
         ivf = fi.result().select("query_id", "vec_id")

@@ -10,6 +10,10 @@ run the same engine posture:
 - Arrow enabled for the few Pandas-UDF paths (multimodal plumbing).
 - shuffle.partitions sized from env (local test default 32; a real
   cluster deployment overrides via spark-submit conf).
+- driver heap sized to the box (:func:`default_driver_memory`) unless
+  ``SPARK_GRAFT_DRIVER_MEM`` says otherwise.
+- PySpark's per-call stack capture off (errors keep their class and
+  message, not the Python file:line of their query context).
 """
 
 from __future__ import annotations
@@ -18,6 +22,17 @@ import json
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap for a local session: half of physical memory, in
+    whole GiB, clamped to [1g, 48g] — the JVM hosts the executors too,
+    so it gets a large share, but never more than the box has."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    gib = phys_bytes // 2 // (1 << 30)
+    return f"{min(max(gib, 1), 48)}g"
+
 
 #: configs applied to every session this engine creates.  Values chosen
 #: for the local[32] test harness; on a real cluster these are baseline
@@ -62,11 +77,12 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Avoid tiny-file explosions when tests write parquet.
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
-    # local[32] hosts driver AND all executor threads in ONE JVM: the
-    # 1 GB default heap OOMs at ~50k-doc dedup workloads on a 128 GiB
-    # box.  Size the heap to the machine (cluster deployments override
-    # per-executor via spark-submit as usual).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    # local[N] hosts driver AND all executor threads in ONE JVM: the
+    # 1 GB default heap OOMs at ~50k-doc dedup workloads.  Size the heap
+    # to the machine (cluster deployments override per-executor via
+    # spark-submit as usual).
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    or default_driver_memory(),
     "spark.driver.maxResultSize": "4g",
     # Don't truncate scan metadata in explain output — plan assertions
     # (PushedFilters / ReadSchema) read it.
@@ -74,6 +90,13 @@ ENGINE_CONF: dict[str, str] = {
     # Let Catalyst negotiate filters with Python Data Sources (the
     # paginated REST-style source in sources/paginated.py).
     "spark.sql.python.filterPushdown.enabled": "true",
+    # PySpark wraps every functions/Column call to record the Python
+    # call site for error query contexts: a stack walk plus ~5 py4j
+    # round trips per call, which dominated the build of column-heavy
+    # plans (simhash's 64 votes).  Errors still raise with the same
+    # class and message; they just carry no Python file:line.  Static:
+    # must be set before the session starts.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

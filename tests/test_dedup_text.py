@@ -72,6 +72,30 @@ def test_simhash_identical_docs_same_signature(spark):
     assert sigs[1] != sigs[4]
 
 
+def test_simhash_signatures_build_in_few_py4j_round_trips(spark, sf_dir):
+    """Each vote and the signature are parsed from one SQL string: the
+    build takes a few hundred gateway round trips, not the ~10 000 of
+    one Column call per CASE/OR node."""
+    from square_etl_spark.io import load_table
+    from square_etl_spark.operators.dedup import simhash_signatures
+
+    docs = load_table(spark, sf_dir, "documents")
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        simhash_signatures(docs)
+    finally:
+        del client.send_command
+    assert len(calls) < 1000, f"{len(calls)} py4j round trips"
+
+
 def test_simhash_near_dup_finds_close_pairs(spark):
     pairs = {
         (r.id_a, r.id_b): r.hamming
@@ -130,8 +154,15 @@ def test_connected_components_chain_and_islands(spark):
         [(1, 2), (2, 3), (7, 8), (3, 4)],  # chain 1-2-3-4, island 7-8
         "id_a long, id_b long",
     )
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-min-label", "min-label connected components")
     got = {r.doc_id: r.cluster_id for r in connected_components(pairs).collect()}
+    jobs = len(sc.statusTracker().getJobIdsForGroup("cc-min-label"))
+    sc.setLocalProperty("spark.jobGroup.id", None)
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7}
+    # round 1 comes straight from the edges: no identity-label
+    # checkpoint and no first join round (the earlier shape ran 25)
+    assert jobs <= 24, f"min-label CC ran {jobs} jobs"
 
 
 def test_connected_components_star_fewer_rounds_on_chain(spark):
@@ -161,6 +192,8 @@ def test_connected_components_star_fewer_rounds_on_chain(spark):
     }
     assert got_star == got_ml == want
     assert star_stats["rounds"] < ml_stats["rounds"]
+    # 16 propagation rounds plus the one that observes no change
+    assert ml_stats["rounds"] == 17
     assert star_stats["rounds"] <= 8  # ~log₂(16) + fixpoint-detect rounds
 
 

@@ -332,6 +332,32 @@ def test_pq_encode_layout_and_determinism(spark, sf_dir):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, codes2.collect()))
 
 
+def test_pq_encode_pool_jobs_keep_the_callers_job_group(spark, sf_dir):
+    """The subspace fits run on a driver thread pool; every job they
+    launch must carry the caller's job group, or cancelJobGroup and
+    per-query attribution miss it.  Job ids are sequential, so the jobs
+    of the call are exactly those between two marker jobs."""
+    from square_etl_spark.operators.similarity import pq_encode
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker(group):
+        sc.setJobGroup(group, "marker")
+        sc.parallelize([1]).count()
+        return max(tracker.getJobIdsForGroup(group))
+
+    e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 8)
+    before = marker("pq-before")
+    sc.setJobGroup("pq-encode", "pq_encode under a job group")
+    pq_encode(e, dim=64, m=4, ksub=2, iters=1)
+    after = marker("pq-after")
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    launched = set(range(before + 1, after))
+    assert launched, "pq_encode launched no jobs"
+    assert launched == set(tracker.getJobIdsForGroup("pq-encode"))
+
+
 def test_ivfpq_topk_shape_and_rescore_correctness(spark, sf_dir):
     """The rescored cosine values must be the EXACT cosines of the
     returned pairs (PQ only selects candidates; it must never change
