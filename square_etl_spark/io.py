@@ -170,27 +170,36 @@ def compact_table(
     ``tempfile.gettempdir()`` had the exact crash window
     ``_swap_into`` was built to close — table deleted, replacement
     not yet in place — and a /tmp on another filesystem silently
-    degraded the move to a non-atomic copy).  Returns the file count
-    after compaction.
+    degraded the move to a non-atomic copy).  The read → write → swap
+    holds the table's writer lock, so it serializes with merges.
+    Returns the file count after compaction.
     """
-    from square_etl_spark.sinks.merge import _recover_swap, _staging_dir, _swap_into
+    from square_etl_spark.sinks.merge import (
+        _recover_swap,
+        _staging_dir,
+        _swap_into,
+        _table_lock,
+    )
 
-    _recover_swap(path)
-    df = spark.read.parquet(path)
-    tmp = _staging_dir(path)
-    writer = df.repartition(target_files, *(partition_cols or [])).write.mode(
-        "overwrite"
-    )
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
-    _swap_into(tmp, path)
-    return sum(
-        1
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
+    # the merge sink's writer lock: a compaction racing a merge would
+    # otherwise swap its pre-merge snapshot over the merge's output
+    with _table_lock(path):
+        _recover_swap(path)
+        df = spark.read.parquet(path)
+        tmp = _staging_dir(path)
+        writer = df.repartition(target_files, *(partition_cols or [])).write.mode(
+            "overwrite"
+        )
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(tmp)
+        _swap_into(tmp, path)
+        return sum(
+            1
+            for root, _, files in os.walk(path)
+            for f in files
+            if f.endswith(".parquet")
+        )
 
 
 def json_ingest_quarantine(

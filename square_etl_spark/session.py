@@ -8,8 +8,8 @@ run the same engine posture:
   realistic 100 TB hazard in the reference's model is tenant skew
   (every warehouse row carries tenant_id; SURVEY.md §4).
 - Arrow enabled for the few Pandas-UDF paths (multimodal plumbing).
-- shuffle.partitions sized from env (local test default 32; a real
-  cluster deployment overrides via spark-submit conf).
+- shuffle.partitions 32 (a real cluster deployment overrides it via
+  spark-submit conf or ``SPARK_GRAFT_EXTRA_CONF``).
 - driver heap sized to the box (:func:`default_driver_memory`) unless
   ``SPARK_GRAFT_DRIVER_MEM`` says otherwise.
 - PySpark's per-call stack capture off (errors keep their class and
@@ -62,21 +62,20 @@ ENGINE_CONF: dict[str, str] = {
     # Parquet scans: push filters; split files at 32 MB so the small
     # single-file fixtures still fan out across local cores (a 13 MB
     # file at the 128 MB default is ONE task on a 32-thread runner).
-    # 100 TB deployments override upward via env/spark-submit — there
-    # the concern inverts to capping task count.
+    # 100 TB deployments override upward via spark-submit or
+    # SPARK_GRAFT_EXTRA_CONF — there the concern inverts to capping
+    # task count.
     "spark.sql.parquet.filterPushdown": "true",
     # zstd beats snappy ~30-40% on warehouse data for similar CPU —
     # at 100 TB that's tens of TB of storage and scan bandwidth.
     "spark.sql.parquet.compression.codec": "zstd",
-    "spark.sql.files.maxPartitionBytes": os.environ.get(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES", str(32 * 1024 * 1024)
-    ),
+    "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
     # Spark has no TIMESTAMP(NANOS) support — read ns columns as raw
     # int64 and convert explicitly (io.load_table truncates ns → µs,
     # matching DuckDB's ns→µs cast so oracle comparisons agree).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Avoid tiny-file explosions when tests write parquet.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
+    "spark.sql.shuffle.partitions": "32",
     # local[N] hosts driver AND all executor threads in ONE JVM: the
     # 1 GB default heap OOMs at ~50k-doc dedup workloads.  Size the heap
     # to the machine (cluster deployments override per-executor via

@@ -19,17 +19,19 @@ merge, :func:`merge_dataframes`, is MERGE INTO re-expressed as:
    (left-anti join);
 3. union.
 
-:func:`merge_upsert` is the one materialized upsert sink.  It runs the
-pure merge inside a single locked read → merge → stage → swap routine
-(:func:`_locked_merge`, shared with the change-feed sink
-:func:`cdc_merge`): empty check, writer lock, crash recovery, target
-read, staged write counted on the write job, rename-only swap.  The
-table layout is the routine's only branch: ``partition_col=None``
-merges and swaps the whole directory; a partition column reads and
-swaps only the partitions the batch touches (a 24 h batch rewrites ~1
-day of partitions).  On a real deployment the same pure merge backs a
-Delta/Iceberg ``MERGE INTO`` where the table format gives true atomic
-commits.
+:func:`merge_upsert` is the one materialized upsert sink.  It and the
+change-feed sink :func:`cdc_merge` run the pure merge inside one
+routine, :func:`_locked_merge`, all of it under the table's writer
+lock: crash recovery, the batch staged once (its counted write is the
+K3 emptiness check), the target slices read, the merged slices
+written with a count on the write job, and a rename-only swap of each
+slice.  A *slice* is a directory the swap replaces whole: the table
+itself, or with a partition column one ``<col>=<value>`` directory,
+named by the partition directories Spark wrote for the staged batch
+(a 24 h batch rewrites ~1 day of partitions).  Building the slice
+list is the only step that depends on the layout.  On a real
+deployment the same pure merge backs a Delta/Iceberg ``MERGE INTO``
+where the table format gives true atomic commits.
 """
 
 from __future__ import annotations
@@ -429,72 +431,67 @@ def _locked_merge(
     target_path: str,
     batch: DataFrame,
     target_schema: StructType,
-    merge: Callable[[DataFrame | None], DataFrame],
+    merge: Callable[[DataFrame | None, DataFrame], DataFrame],
     partition_col: str | None,
     lock_timeout_s: float,
 ) -> int:
     """The one materialized MERGE behind :func:`merge_upsert` and
-    :func:`cdc_merge`: empty check → writer lock → crash recovery →
-    read target → ``merge(target)`` (a pure merge of the batch onto the
-    target, ``None`` when there is none) → staged counted write → swap.
+    :func:`cdc_merge`, all of it under the writer lock: crash recovery
+    → stage the batch → read the target slices → ``merge(target,
+    batch)`` (a pure merge of the staged batch onto the target slices,
+    ``None`` when there are none) → staged counted write → swap.
 
-    Only two steps depend on the table layout.  With ``partition_col``
-    None the whole directory is the slice and is swapped once.  With a
-    column name the read is restricted to the partitions the batch
-    touches and each touched partition directory is swapped on its own;
-    untouched partitions are never opened or rewritten.
+    A *slice* is a directory the swap replaces whole: the table itself,
+    or one ``<col>=<value>`` partition directory.  When the table
+    exists, the batch is written once to a sibling staging dir,
+    partitioned like the table; that write's count is the K3 emptiness
+    check, and the partition directories Spark wrote (NULL's
+    ``__HIVE_DEFAULT_PARTITION__`` included) name the slices.  The
+    merge then reads the staged batch and only those target slices, so
+    the batch lineage runs exactly once and the slices read are the
+    slices swapped.  A new table skips staging: the merged batch is
+    written, dropped when it counted no rows, and swapped in whole.
+    Building the slice list is the only step that depends on the
+    layout.
     """
-    if partition_col is None:
-        if batch.isEmpty():
-            return 0
-    else:
-        # the touched values (driver-side, bounded by the partition
-        # count) double as the K3 emptiness check: no extra batch job
-        touched = [r[0] for r in batch.select(partition_col).distinct().collect()]
-        if not touched:
-            return 0
+    def under(root: str, name: str) -> str:
+        return os.path.join(root, name) if name else root
+
     with _table_lock(target_path, timeout_s=lock_timeout_s):
         _recover_swap(target_path)
-        if partition_col is not None:
-            # repair any partition-dir swap a previous crash interrupted
-            for old in glob.glob(os.path.join(target_path, "*.old")):
-                _recover_swap(old[: -len(".old")])
-        target = None
-        if os.path.exists(target_path):
-            reader = spark.read.schema(target_schema)
-            if partition_col is None:
-                target = reader.parquet(target_path)
-            else:
-                # NULL partition values land in hive's
-                # __HIVE_DEFAULT_PARTITION__ dir.  ``isin`` never matches
-                # NULL (three-valued logic), so without the explicit
-                # isNull branch the target's NULL-partition rows would be
-                # excluded from the merge slice while the swap below
-                # still replaced their directory — silently dropping them.
-                non_null = [t for t in touched if t is not None]
-                slice_cond = (
-                    F.col(partition_col).isin(non_null) if non_null else F.lit(False)
+        # repair any partition-dir swap a previous crash interrupted
+        for old in glob.glob(os.path.join(target_path, "*.old")):
+            _recover_swap(old[: -len(".old")])
+        out = _staging_dir(target_path)
+        if not os.path.exists(target_path):
+            n = _write_counted(merge(None, batch), out, partition_col)
+            slices = [""] if n else []
+        else:
+            staged = _staging_dir(target_path)
+            try:
+                if not _write_counted(batch, staged, partition_col):
+                    return 0
+                slices = [""] if partition_col is None else sorted(
+                    e for e in os.listdir(staged) if e.startswith(f"{partition_col}=")
                 )
-                if len(non_null) != len(touched):
-                    slice_cond = slice_cond | F.col(partition_col).isNull()
-                target = (
-                    reader.option("basePath", target_path)
-                    .parquet(target_path)
-                    .filter(slice_cond)
-                )
-        tmp = _staging_dir(target_path)
-        n = _write_counted(merge(target), tmp, partition_col)
-        if target is None or partition_col is None:
-            _swap_into(tmp, target_path)
-            return n
-        # swap ONLY the partition dirs the batch touched (tmp holds
-        # exactly the touched values by construction — merged == slice
-        # ∪ batch); each publish is the rename-only _swap_into protocol
-        # (atomic per partition, crash-recoverable via the *.old sweep)
-        for entry in os.listdir(tmp):
-            if entry.startswith(f"{partition_col}="):
-                _swap_into(os.path.join(tmp, entry), os.path.join(target_path, entry))
-        shutil.rmtree(tmp, ignore_errors=True)
+                existing = [
+                    p for p in (under(target_path, s) for s in slices)
+                    if os.path.exists(p)
+                ]
+                target = spark.read.schema(target_schema).option(
+                    "basePath", target_path
+                ).parquet(*existing) if existing else None
+                staged_batch = spark.read.schema(batch.schema).option(
+                    "basePath", staged
+                ).parquet(staged)
+                n = _write_counted(merge(target, staged_batch), out, partition_col)
+            finally:
+                shutil.rmtree(staged, ignore_errors=True)
+        # each publish is the rename-only _swap_into protocol (atomic
+        # per slice, crash-recoverable via the *.old sweep above)
+        for s in slices:
+            _swap_into(under(out, s), under(target_path, s))
+        shutil.rmtree(out, ignore_errors=True)
         return n
 
 
@@ -510,7 +507,7 @@ def merge_upsert(
     batch_ts: str | None = None,
 ) -> int:
     """Materialized MERGE into a parquet path; returns rows written
-    (the whole table, or with ``partition_col`` the touched slice).
+    (the whole table, or with ``partition_col`` the touched slices).
 
     Atomicity (E3, the reference's BEGIN/COMMIT): the merged result is
     written to a sibling staging dir first, then published with the
@@ -518,18 +515,27 @@ def merge_upsert(
     point leaves a state :func:`_recover_swap` (run on the next call)
     restores to either the old or the new complete version, never a
     lost or half-written table.  Pinned end-to-end by the streaming
-    crash tests (kill mid-write → restart converges).  Empty batch
-    short-circuits (K3, src/etl-square-payments.ts:50-53).
+    crash tests (kill mid-write → restart converges).
 
-    Concurrent WRITERS serialize on :func:`_table_lock` (the swap was
-    already reader-atomic): the target read happens inside the lock,
-    so a waiting writer merges onto the winner's published rows —
-    interleaved calls compose instead of last-swap-wins dropping a
-    batch; lock starvation raises :class:`ConcurrentWriterError`.
+    Everything happens under :func:`_table_lock` (the swap was already
+    reader-atomic), so concurrent WRITERS serialize: a waiting writer
+    merges onto the winner's published rows — interleaved calls
+    compose instead of last-swap-wins dropping a batch; lock starvation
+    raises :class:`ConcurrentWriterError`.  Onto an existing table the
+    batch is first written once to a sibling staging dir, partitioned
+    like the table; the merge reads that staged batch, so the batch
+    lineage runs exactly once and the partitions read are the
+    partitions swapped even for a source that changes between reads.
+    The staged write's count decides K3 (src/etl-square-payments.ts
+    :50-53): an empty batch returns 0 and writes nothing.  A new table
+    skips staging; its merged batch is written, dropped when it counted
+    no rows (no target dir appears), and swapped in whole.
 
     ``partition_col`` makes the target a hive-layout table
-    (``target/<col>=<val>/``) and restricts the merge to the partitions
-    the batch touches — the 100 TB-shaped upsert (SURVEY.md hard-list
+    (``target/<col>=<val>/``) and restricts the merge to the slices the
+    staged batch wrote, NULL's ``__HIVE_DEFAULT_PARTITION__`` included:
+    only those directories are read (by path, never by listing the
+    table) and swapped — the 100 TB-shaped upsert (SURVEY.md hard-list
     #1): a 24 h batch rewrites ~1 day of partitions, and untouched
     partition directories stay byte-identical on disk.  INVARIANT the
     caller owns: ``partition_col`` must be immutable per natural key
@@ -542,8 +548,8 @@ def merge_upsert(
     """
     return _locked_merge(
         spark, target_path, batch, batch.schema,
-        lambda target: merge_dataframes(
-            target, batch, keys, order_cols, stamp_updated_at, batch_ts
+        lambda target, staged: merge_dataframes(
+            target, staged, keys, order_cols, stamp_updated_at, batch_ts
         ),
         partition_col, lock_timeout_s,
     )
@@ -590,7 +596,9 @@ def cdc_merge(
     carry ``op_col`` — it exists only on the change feed."""
     return _locked_merge(
         spark, target_path, batch, batch.drop(op_col).schema,
-        lambda target: cdc_merge_dataframes(target, batch, keys, order_cols, op_col),
+        lambda target, staged: cdc_merge_dataframes(
+            target, staged, keys, order_cols, op_col
+        ),
         None, lock_timeout_s,
     )
 

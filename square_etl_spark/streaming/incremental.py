@@ -148,6 +148,7 @@ def _fold_stream_availablenow(
         _recover_swap,
         _staging_dir,
         _swap_into,
+        _table_lock,
     )
 
     reader = spark.readStream
@@ -157,26 +158,29 @@ def _fold_stream_availablenow(
     marker = "_last_batch_id"
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # repair a swap a previous crash interrupted before reading
-        _recover_swap(target_path)
-        target = None
-        applied = -1
-        if os.path.exists(target_path):
-            mpath = os.path.join(target_path, marker)
-            if os.path.exists(mpath):
-                with open(mpath) as fh:
-                    applied = int(fh.read().strip())
-            target = spark.read.parquet(target_path)
-        if batch_id <= applied:
-            return  # replayed batch: already folded in
-        merged = fold(target, batch_df)
-        tmp = _staging_dir(target_path)
-        merged.write.mode("overwrite").parquet(tmp)
-        # batch_id lands INSIDE the staging dir, so the marker and the
-        # data publish in the same atomic rename
-        with open(os.path.join(tmp, marker), "w") as fh:
-            fh.write(str(batch_id))
-        _swap_into(tmp, target_path)
+        # the merge sink's writer lock serializes this read → fold →
+        # swap with every other writer of the target
+        with _table_lock(target_path):
+            # repair a swap a previous crash interrupted before reading
+            _recover_swap(target_path)
+            target = None
+            applied = -1
+            if os.path.exists(target_path):
+                mpath = os.path.join(target_path, marker)
+                if os.path.exists(mpath):
+                    with open(mpath) as fh:
+                        applied = int(fh.read().strip())
+                target = spark.read.parquet(target_path)
+            if batch_id <= applied:
+                return  # replayed batch: already folded in
+            merged = fold(target, batch_df)
+            tmp = _staging_dir(target_path)
+            merged.write.mode("overwrite").parquet(tmp)
+            # batch_id lands INSIDE the staging dir, so the marker and the
+            # data publish in the same atomic rename
+            with open(os.path.join(tmp, marker), "w") as fh:
+                fh.write(str(batch_id))
+            _swap_into(tmp, target_path)
 
     (
         stream.writeStream.foreachBatch(sink)

@@ -195,6 +195,42 @@ def test_compact_table_swap_under_concurrent_reader(spark, tmp_path):
     assert after == {(i, 1) for i in range(200)}
 
 
+def test_compact_table_waits_for_the_writer_lock(spark, tmp_path):
+    """compact_table takes the merge sink's writer lock: while another
+    writer holds it, the compaction waits instead of swapping its
+    pre-merge snapshot over that writer's output; once the lock is
+    released it runs to completion with the same rows."""
+    import threading
+
+    from square_etl_spark.sinks.merge import _table_lock
+
+    path = os.path.join(tmp_path, "locked_target")
+    df = spark.createDataFrame([(i, 1) for i in range(100)], "id long, tag long")
+    df.repartition(8).write.mode("overwrite").parquet(path)
+
+    out: dict = {}
+
+    def compact():
+        try:
+            out["files"] = compact_table(spark, path, target_files=2)
+        except Exception as exc:  # noqa: BLE001 - surfaced by the asserts
+            out["error"] = exc
+
+    held = _table_lock(path)
+    held.__enter__()
+    t = threading.Thread(target=compact, daemon=True)
+    try:
+        t.start()
+        t.join(timeout=20)
+        assert t.is_alive(), f"compaction ran under a held lock: {out}"
+    finally:
+        held.__exit__(None, None, None)
+    t.join(timeout=300)
+    assert not t.is_alive() and out == {"files": 2}
+    after = {tuple(r) for r in spark.read.parquet(path).collect()}
+    assert after == {(i, 1) for i in range(100)}
+
+
 def test_versioned_pointer_concurrent_reader_and_vacuum(spark, tmp_path):
     """The versioned-table pointer flip (io.versioned_write) under a
     concurrent reader WITH vacuum running between publishes: a reader

@@ -279,8 +279,25 @@ def test_partitioned_merge_empty_batch_short_circuits(spark, tmp_path):
         spark, target, empty, ["k"], ["updated_at"], partition_col="day"
     ) == 0
     assert not os.path.exists(target)
-    # decided before the writer lock: no lock dir is left behind either
+    # decided under the writer lock, which the empty path releases
+    # too: no lock dir is left behind either
     assert not os.path.exists(target + ".lock")
+
+
+def test_empty_batch_onto_existing_table_writes_nothing(spark, tmp_path):
+    """K3 onto an existing table: the staged batch counts 0 rows, so
+    the merge returns 0 without touching a partition or leaving a
+    staging dir or lock behind."""
+    target = os.path.join(tmp_path, "tbl")
+    seed = _pbatch(spark, [("a", 1, "2024-01-01 00:00:00", "2024-01-01")])
+    merge_upsert(spark, target, seed, ["k"], ["updated_at"], partition_col="day")
+    before = _pfiles(target, "2024-01-01")
+    empty = spark.createDataFrame([], PSCHEMA)
+    assert merge_upsert(
+        spark, target, empty, ["k"], ["updated_at"], partition_col="day"
+    ) == 0
+    assert _pfiles(target, "2024-01-01") == before
+    assert sorted(os.listdir(tmp_path)) == ["tbl"]
 
 
 def test_merge_upsert_counts_on_write_no_reread_job(spark, tmp_path):
@@ -288,7 +305,9 @@ def test_merge_upsert_counts_on_write_no_reread_job(spark, tmp_path):
     write job (merge._write_counted) instead of re-reading the merged
     output — one fewer Spark job, and at 100 TB one fewer full scan,
     per merge.  Pinned via job groups: the old re-read variant measured
-    exactly one job more on both paths (4 fresh / 7 existing)."""
+    4 fresh / 7 existing, and the shape that ran a separate ``isEmpty``
+    job over the batch lineage 3 / 6; the staged batch's counted write
+    is now the emptiness check."""
     target = os.path.join(tmp_path, "tbl")
     batch = _pbatch(spark, [
         ("a", 1, "2024-01-01 00:00:00", "2024-01-01"),
@@ -303,15 +322,16 @@ def test_merge_upsert_counts_on_write_no_reread_job(spark, tmp_path):
     existing_jobs = len(sc.statusTracker().getJobIdsForGroup("merge-existing"))
     sc.setLocalProperty("spark.jobGroup.id", None)
     assert n1 == n2 == 2
-    assert fresh_jobs <= 3, f"fresh merge ran {fresh_jobs} jobs (re-read crept back?)"
-    assert existing_jobs <= 6, f"existing merge ran {existing_jobs} jobs"
+    assert fresh_jobs <= 2, f"fresh merge ran {fresh_jobs} jobs (re-read crept back?)"
+    assert existing_jobs <= 5, f"existing merge ran {existing_jobs} jobs"
 
 
 def test_partitioned_merge_counts_on_write_one_batch_job_fewer(spark, tmp_path):
-    """Partitioned twin of the job pin above.  The touched-partition
-    collect is also the emptiness check, so a partitioned merge runs no
-    separate ``isEmpty`` job over the batch lineage: the bounds sit one
-    job below the earlier shape (5 fresh / 8 existing)."""
+    """Partitioned twin of the job pin above: the same bounds as the
+    unpartitioned merge.  The staged batch's counted write is the
+    emptiness check and names the touched partitions, so no separate
+    job over the batch lineage collects them (the shape that did
+    measured 4 fresh / 7 existing, the one before it 5 / 8)."""
     target = os.path.join(tmp_path, "tbl")
     batch = _pbatch(spark, [
         ("a", 1, "2024-01-01 00:00:00", "2024-01-01"),
@@ -326,8 +346,83 @@ def test_partitioned_merge_counts_on_write_one_batch_job_fewer(spark, tmp_path):
     existing_jobs = len(sc.statusTracker().getJobIdsForGroup("pmerge-existing"))
     sc.setLocalProperty("spark.jobGroup.id", None)
     assert n1 == n2 == 2
-    assert fresh_jobs <= 4, f"fresh partitioned merge ran {fresh_jobs} jobs"
-    assert existing_jobs <= 7, f"existing partitioned merge ran {existing_jobs} jobs"
+    assert fresh_jobs <= 2, f"fresh partitioned merge ran {fresh_jobs} jobs"
+    assert existing_jobs <= 5, f"existing partitioned merge ran {existing_jobs} jobs"
+
+
+def test_partitioned_merge_evaluates_the_batch_once(spark, tmp_path):
+    """The batch lineage runs exactly once per merge, so the target
+    slices read are the slices swapped even when the batch's partition
+    values change between evaluations (a source that grows between
+    reads).  Here the partition column comes from a nondeterministic
+    UDF that answers ``A`` on its first call and ``B`` after: a merge
+    that read the slices for one evaluation and swapped those of
+    another would replace ``day=B`` without reading ``y``."""
+    from pyspark.sql import functions as F
+
+    target = os.path.join(tmp_path, "tbl")
+    seed = _pbatch(spark, [
+        ("x", 1, "2024-01-01 00:00:00", "A"),
+        ("y", 2, "2024-01-01 00:00:00", "B"),
+    ])
+    merge_upsert(spark, target, seed, ["k"], ["updated_at"], partition_col="day")
+
+    calls = os.path.join(tmp_path, "udf_calls")
+
+    def flip(_k):
+        n = 0
+        if os.path.exists(calls):
+            with open(calls) as fh:
+                n = int(fh.read())
+        with open(calls, "w") as fh:
+            fh.write(str(n + 1))
+        return "A" if n == 0 else "B"
+
+    day = F.udf(flip, "string").asNondeterministic()
+    batch = _pbatch(spark, [("z", 3, "2024-01-02 00:00:00", None)]).withColumn(
+        "day", day("k")
+    )
+    assert merge_upsert(
+        spark, target, batch, ["k"], ["updated_at"], partition_col="day"
+    ) == 2
+    got = {
+        (r.k, r.v)
+        for r in spark.read.schema(PSCHEMA)
+        .option("basePath", target).parquet(target).collect()
+    }
+    assert got == {("x", 1), ("y", 2), ("z", 3)}
+    with open(calls) as fh:
+        assert fh.read() == "1"
+
+
+def test_partitioned_merge_lists_only_touched_partitions(spark, tmp_path):
+    """A merge reads the touched partition directories by path, so it
+    never lists the whole table.  With more partitions than Spark's
+    parallel-listing threshold (32), reading the table root ran one
+    listing job with a task per partition directory."""
+    target = os.path.join(tmp_path, "tbl")
+    seed = _pbatch(spark, [
+        (f"k{i}", i, "2024-01-01 00:00:00", f"d{i:02d}") for i in range(40)
+    ])
+    merge_upsert(spark, target, seed, ["k"], ["updated_at"], partition_col="day")
+    assert sum(e.startswith("day=") for e in os.listdir(target)) == 40
+
+    batch = _pbatch(spark, [("k7", 70, "2024-01-02 00:00:00", "d07")])
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    sc.setJobGroup("pmerge-one-of-40", "partitioned merge touching 1 of 40")
+    try:
+        n = merge_upsert(
+            spark, target, batch, ["k"], ["updated_at"], partition_col="day"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 1
+    tasks = [
+        sum(i.numTasks for s in st.getJobInfo(j).stageIds if (i := st.getStageInfo(s)))
+        for j in st.getJobIdsForGroup("pmerge-one-of-40")
+    ]
+    assert tasks and max(tasks) < 40, f"tasks per merge job: {tasks}"
 
 
 def test_partitioned_first_write_failure_leaves_no_partial_table(spark, tmp_path):

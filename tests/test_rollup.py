@@ -79,6 +79,50 @@ def test_stream_rollup_availablenow_maintains_exactly_once(spark, tmp_path):
     assert _as_set(spark.read.parquet(rollup)) == got2
 
 
+def test_stream_rollup_waits_for_the_writer_lock(spark, tmp_path):
+    """The streaming fold sinks take the merge sink's writer lock: a
+    drain that starts while another writer holds the rollup's lock
+    waits, then folds its batch once the lock is released."""
+    import os
+    import threading
+
+    from square_etl_spark.sinks.merge import _table_lock
+    from square_etl_spark.streaming.incremental import stream_rollup_availablenow
+
+    src = os.path.join(tmp_path, "src")
+    ckpt = os.path.join(tmp_path, "ckpt")
+    rollup = os.path.join(tmp_path, "rollup")
+    spark.createDataFrame(
+        [("a", 1), ("b", 5)], "k string, v long"
+    ).coalesce(1).write.mode("append").parquet(src)
+
+    out: dict = {}
+
+    def drain():
+        try:
+            stream_rollup_availablenow(
+                spark, src, ckpt, rollup, ["k"], ["v"], schema="k string, v long"
+            )
+            out["done"] = True
+        except Exception as exc:  # noqa: BLE001 - surfaced by the asserts
+            out["error"] = exc
+
+    held = _table_lock(rollup)
+    held.__enter__()
+    t = threading.Thread(target=drain, daemon=True)
+    try:
+        t.start()
+        t.join(timeout=20)
+        assert t.is_alive() and not os.path.exists(rollup), (
+            f"the drain folded under a held lock: {out}"
+        )
+    finally:
+        held.__exit__(None, None, None)
+    t.join(timeout=300)
+    assert not t.is_alive() and out == {"done": True}
+    assert _as_set(spark.read.parquet(rollup)) == {("a", 1, 1), ("b", 5, 1)}
+
+
 def test_incremental_hll_equals_one_shot_estimate(spark):
     """Sketch-union monoid: maintaining per-key HLL sketches over any
     batch split yields the same estimate as one sketch over all data."""
